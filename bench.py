@@ -166,17 +166,8 @@ def run_queries(spark, sf_dir: str, pages_path: str) -> dict:
         # (classified-messages materialization; extract+link+dedup) —
         # same job, but per-phase best-of-N timing is robust against
         # this host's noisy-neighbor variance.
-        from project_discord_knowledge_graph_spark.operators.dedup import (
-            aggregate_triples,
-        )
-        from project_discord_knowledge_graph_spark.operators.extract import (
-            extract_triples,
-        )
-        from project_discord_knowledge_graph_spark.operators.link import (
-            link_qa,
-        )
         from project_discord_knowledge_graph_spark.plans.pipeline import (
-            classify_pages,
+            classify_pages, triples_from_messages,
         )
         from project_discord_knowledge_graph_spark.sources.pages import (
             read_pages,
@@ -188,8 +179,7 @@ def run_queries(spark, sf_dir: str, pages_path: str) -> dict:
         msgs = spark.read.parquet(stage)
         extras["triples"] = timed(
             "kg_extract_link_dedup",
-            lambda: aggregate_triples(extract_triples(msgs),
-                                      link_qa(msgs)).count())
+            lambda: triples_from_messages(msgs).count())
         timings["kg_pipeline"] = round(
             timings["kg_stage_write"] + timings["kg_extract_link_dedup"], 3)
         shutil.rmtree(stage, ignore_errors=True)

@@ -76,9 +76,6 @@ def pipeline_run(reps: int) -> dict:
     import shutil
 
     from bench import ensure_pages
-    from project_discord_knowledge_graph_spark.operators.dedup import (
-        aggregate_triples,
-    )
     from project_discord_knowledge_graph_spark.operators.extract import (
         extract_triples,
     )
@@ -86,7 +83,7 @@ def pipeline_run(reps: int) -> dict:
         link_qa,
     )
     from project_discord_knowledge_graph_spark.plans.pipeline import (
-        classify_pages,
+        classify_pages, triples_from_messages,
     )
     from project_discord_knowledge_graph_spark.session import get_spark
     from project_discord_knowledge_graph_spark.sources.pages import (
@@ -130,8 +127,7 @@ def pipeline_run(reps: int) -> dict:
         timed("link_noop", lambda: noop(link_qa(msgs)))
         spark.sparkContext.setJobDescription("extract+link+dedup")
         timed("extract_link_dedup",
-              lambda: aggregate_triples(extract_triples(msgs),
-                                        link_qa(msgs)).count())
+              lambda: triples_from_messages(msgs).count())
         spark.sparkContext.setJobDescription(None)
         return {"metric": "pipeline_phases", "unit": "sec",
                 "sf": sf_dir, "cores": cores, "n_pages": n_pages,

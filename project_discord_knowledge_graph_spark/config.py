@@ -146,6 +146,12 @@ TRUNC_STRATEGY = 50
 # Validation (nodes.py:667-691)
 MIN_OBJECT_LEN = 2
 
+# The 29 characters str.strip() removes (nodes.py:660, 682-684): the one
+# whitespace spec for operators.dedup.pystrip and the oracle SQL.
+PY_WHITESPACE = ("\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+                 "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007"
+                 "\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000")
+
 # Dedup stage priorities: the reference dedups keep-FIRST in encounter
 # order (nodes.py:656-664); encounter order is per-type extraction
 # (extractor.py:569-584) before Q&A links (extractor.py:589).  Under

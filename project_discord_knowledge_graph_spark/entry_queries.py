@@ -77,8 +77,12 @@ def _barrier(cond):
     return F.when(F.spark_partition_id() >= 0, cond).otherwise(F.lit(False))
 
 
+# config.PY_WHITESPACE as an RE2 class (str.strip / str.isspace)
+_WS_CLASS = "[" + "".join(f"\\x{{{ord(c):x}}}" for c in C.PY_WHITESPACE) + "]"
+
+
 def _strip_sql(col: str) -> str:
-    return f"regexp_replace({col}, '^\\s+|\\s+$', '', 'g')"
+    return f"regexp_replace({col}, '^{_WS_CLASS}+|{_WS_CLASS}+$', '', 'g')"
 
 
 def _trunc_sql(col: str, n: int) -> str:
@@ -551,14 +555,8 @@ _ZS_LABEL_CASE = " ".join(
 # NULL text is fillna('')-defaulted and whitespace-only text is
 # .str.strip()-defaulted, matching the reference's text.strip() check
 # (classifier.py:126) — so the oracle defaults on NULL and
-# whitespace-only too, not just t = ''.  The RE2 class reproduces
-# Python str.isspace() (verified char-by-char): \s covers ASCII
-# minus vertical tab, \x0b adds it, \p{Z} covers every Unicode
-# separator (NBSP, en/em spaces, line/para separators), \x85 NEL and
-# \x1c-\x1f the file/group/record/unit separators.
-_ZS_EMPTY = (r"(t IS NULL OR "
-             r"regexp_replace(t, '[\s\x0b\p{Z}\x85\x1c-\x1f]', "
-             r"'', 'g') = '')")
+# whitespace-only too, not just t = ''.
+_ZS_EMPTY = f"(t IS NULL OR regexp_replace(t, '{_WS_CLASS}', '', 'g') = '')"
 
 SQL_CLASSIFY_ZERO_SHOT = f"""
 WITH {docs_msgs_sql()},

@@ -207,25 +207,9 @@ def parse_page_udf(html: pd.Series) -> pd.DataFrame:
     })
 
 
-@F.pandas_udf(StringType())
-def extract_and_clean_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """html(binary) -> P3-cleaned main text, in ONE Arrow round-trip.
-
-    Fusing the boilerplate extractor and the P3 cleaner into a single
-    pandas UDF halves the per-task Python worker overhead versus two
-    chained ArrowEvalPython nodes (measured ~2x on the
-    pages->messages stage).  Semantics == clean_preprocessor_series
-    composed with functions.html.extract_text, unchanged.
-    """
-    from .html import _extract_series
-    for s in batches:
-        yield clean_preprocessor_series(_extract_series(s))
-
-
 # pure functions, but nondeterministic marking prevents Catalyst from
 # duplicating the UDF when filters are pushed through projections
 # (see functions/html.py for the measurement)
 clean_text_udf = clean_text_udf.asNondeterministic()
 clean_text_classifier_udf = clean_text_classifier_udf.asNondeterministic()
-extract_and_clean_udf = extract_and_clean_udf.asNondeterministic()
 parse_page_udf = parse_page_udf.asNondeterministic()

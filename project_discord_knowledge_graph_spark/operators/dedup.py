@@ -17,16 +17,15 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-# Python str.strip() over ASCII == btrim over Java-\s's exact char set
-# [ \t\n\x0B\f\r] (regex ^\s+|\s+$ is equivalent but ~6% slower over
-# the 2.9M-triple dedup input — r07; equivalence pinned in
-# tests/test_analytics.py::test_pystrip_btrim_equivalent).
-_WS = " \t\n\x0b\x0c\r"
+from .. import config as C
 
 
 def pystrip(col: Column) -> Column:
-    """Python str.strip() equivalent (leading/trailing whitespace)."""
-    return F.btrim(col, F.lit(_WS))
+    """Python str.strip(): btrim over the 29 characters it removes
+    (config.PY_WHITESPACE — Java's regex \\s covers only 6 of them).
+    Parity with the oracle port is pinned in
+    tests/test_fuzz_parity.py::test_strip_parity_on_all_whitespace."""
+    return F.btrim(col, F.lit(C.PY_WHITESPACE))
 
 
 def dedup_key(subject, predicate, obj):

@@ -41,11 +41,13 @@ def banded_minhash_pairs(sets_df: DataFrame, id_col: str,
     with id_a < id_b, distinct across bands.  Min-hash j of a row is
     min over its elements of xxhash64('<seed>:<j>', element)."""
     nh = n_bands * rows_per_band
+    # one-argument lambdas: F.transform passes (element, index) to a
+    # two-argument one, so a `j=j` default would bind the index
+    minhash = lambda salt: lambda g: F.xxhash64(salt, g)  # noqa: E731
     sig = sets_df.select(
         F.col(id_col),
-        *[F.array_min(F.transform(
-            F.col(set_col),
-            lambda g, j=j: F.xxhash64(F.lit(f"{seed}:{j}"), g)))
+        *[F.array_min(F.transform(F.col(set_col),
+                                  minhash(F.lit(f"{seed}:{j}"))))
           .alias(f"_h{j}") for j in range(nh)])
     band_keys = [
         F.struct(

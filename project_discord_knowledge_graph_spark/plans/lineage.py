@@ -108,11 +108,10 @@ def run_resumable(spark: SparkSession, pages_path: str, out_path: str,
     dict incl. the run_id (stage-1 jobs run in job group
     `kg_stage1_<run_id>` so callers/tests can audit the job count).
     """
-    from ..operators.dedup import aggregate_triples
-    from ..operators.extract import extract_triples
-    from ..operators.link import link_qa
-    from .pipeline import classify_pages
+    from .pipeline import classify_pages, release_handoff, \
+        triples_from_messages
 
+    release_handoff(spark)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     run_id = run_id or uuid.uuid4().hex[:12]
     msg_path = f"{out_path}/messages"
@@ -191,8 +190,7 @@ def run_resumable(spark: SparkSession, pages_path: str, out_path: str,
                .groupBy("bucket")
                .agg(F.max_by("triples_out", "created_at").alias("n"))
                .agg(F.sum("n")).first()[0])
-    msgs = spark.read.parquet(msg_path)
-    triples = aggregate_triples(extract_triples(msgs), link_qa(msgs))
+    triples = triples_from_messages(spark.read.parquet(msg_path))
     # count via observe on the write itself — no post-write re-read job
     triples, obs = observe_counts(triples, f"agg_rows_{run_id}")
     triples.write.mode("overwrite").parquet(triples_path)

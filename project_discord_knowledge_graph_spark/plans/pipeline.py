@@ -8,12 +8,15 @@ section 3.1) as one lazy DAG:
       -> parse message fields           [native regexp]
       -> clean_text P3                  [Arrow pandas UDF]
       -> classify C1                    [native, codegen]
+      -> messages handoff               [staged parquet | persist]
       -> E1-E8 triple extraction        [native, one pass, no shuffle]
       -> J1/J2 Q&A link joins           [2 hash joins on segment keys]
       -> A8 dedup + P7 validation       [1 shuffle on dedup key]
       -> triples
 
 Shuffle budget: exactly three exchanges (two link joins + dedup).
+Every front door ends in `triples_from_messages`, fed by `hand_off`
+(or, in run_resumable, by a staged scan).
 """
 
 from __future__ import annotations
@@ -24,6 +27,11 @@ from ..operators.dedup import aggregate_triples
 from ..operators.extract import extract_triples
 from ..operators.link import link_qa
 from ..sources.pages import pages_to_messages, read_pages
+
+HANDOFF_VIEW = "kg_messages_handoff"  # the session's persisted handoff
+# The staged handoff contract: classified messages minus the columns no
+# extract/link branch reads (~20% fewer bytes, 80 -> 64 MB at 2M pages).
+UNREAD_COLUMNS = ("url", "lang", "thread", "channel")
 
 
 def classify_pages(pages: DataFrame) -> DataFrame:
@@ -38,80 +46,77 @@ def classify_pages(pages: DataFrame) -> DataFrame:
     return pages_to_messages(pages, classify=True)
 
 
-def build_triples(pages: DataFrame, include_semantic: bool = False,
-                  embed_udf=None, cache_messages: bool = False,
-                  stage_dir: str | None = None,
-                  spark: SparkSession | None = None) -> DataFrame:
-    """Full rule path: pages -> validated triple set.
+def release_handoff(spark: SparkSession) -> None:
+    """Drop the session's persisted handoff, if any (dropping a cached
+    temp view uncaches it)."""
+    spark.catalog.dropTempView(HANDOFF_VIEW)
 
-    Branch-feeding strategy for the classified messages (consumed by
-    the extraction branch and the two link branches):
 
-    - `stage_dir` set (production shape): materialize the classified
-      table to parquet once and feed all branches from that scan —
-      the html decode + text-extraction UDF runs exactly once, and
-      the link branches read only their pruned join columns.  At
-      petabyte scale this is the Iceberg handoff between pipeline
-      stages.
-    - `cache_messages`: .persist() instead (measured slower than
-      recompute at small scale — columnar cache build cost).
-    - neither: recompute the narrow stage per branch (fine when the
-      corpus is small or the job is one-shot).
-    """
-    messages = classify_pages(pages)
+def hand_off(messages: DataFrame, stage_dir: str | None = None
+             ) -> DataFrame:
+    """Materialize classified messages once for the three branches of
+    `triples_from_messages`: with `stage_dir`, as parquet minus
+    UNREAD_COLUMNS (the production shape; at scale the Iceberg handoff
+    between stages); otherwise persisted on the first action, as the
+    temp view HANDOFF_VIEW (lost blocks recompute from lineage).
+
+    The session's previous handoff is released first, so a persisted
+    entry never outlives the next front-door invocation (a live one
+    would serve a later invocation over the same path from cache, even
+    after its files were replaced).  Callers that own the action
+    release it right after with `release_handoff`."""
+    spark = messages.sparkSession
+    release_handoff(spark)
     if stage_dir is not None:
-        assert spark is not None, "stage_dir requires the SparkSession"
-        # project to the columns the downstream stages read (guide:
-        # project before materializing) — url/lang/thread/channel are
-        # consumed by no extract/link branch, and dropping them cuts
-        # the staged bytes ~20% (80 -> 64 MB at 2M pages; write wall
-        # flat on tmpfs, the byte cut is the at-scale win).  The
-        # triple output is provably unchanged: no downstream column
-        # reference reaches the dropped four.
-        messages.drop("url", "lang", "thread", "channel") \
+        messages.drop(*UNREAD_COLUMNS) \
             .write.mode("overwrite").parquet(stage_dir)
-        messages = spark.read.parquet(stage_dir)
-    elif cache_messages:
-        messages = messages.persist()
-    extracted = extract_triples(messages)
-    links = link_qa(messages, include_semantic, embed_udf)
-    return aggregate_triples(extracted, links)
+        return spark.read.parquet(stage_dir)
+    messages.createTempView(HANDOFF_VIEW)
+    spark.catalog.cacheTable(HANDOFF_VIEW)
+    return messages
+
+
+def triples_from_messages(messages: DataFrame,
+                          include_semantic: bool = False,
+                          embed_udf=None) -> DataFrame:
+    """Classified messages -> extract (E1-E8) + Q&A link (J1/J2, J3
+    with `include_semantic`) -> dedup + validate (A8/P7).  Three
+    branches read `messages`: pass a handoff or a scan."""
+    return aggregate_triples(extract_triples(messages),
+                             link_qa(messages, include_semantic, embed_udf))
+
+
+def build_triples(pages: DataFrame, include_semantic: bool = False,
+                  embed_udf=None, stage_dir: str | None = None
+                  ) -> DataFrame:
+    """Full rule path: pages -> validated triple set.  The classified
+    messages reach the extract and link branches through `hand_off`
+    (staged under `stage_dir`, else persisted until the next front-door
+    invocation or the caller's `release_handoff`), so the parse UDF
+    runs once per page, not once per branch (five times)."""
+    return triples_from_messages(
+        hand_off(classify_pages(pages), stage_dir),
+        include_semantic, embed_udf)
 
 
 def build_triples_from_path(spark: SparkSession, path: str,
                             after_ts: str | None = None,
                             **kw) -> DataFrame:
-    if "stage_dir" in kw:
-        kw.setdefault("spark", spark)
     return build_triples(read_pages(spark, path, after_ts), **kw)
-
-
-_EXPORT_MSG_CACHE: list = []
 
 
 def build_triples_from_export(spark: SparkSession, path: str,
                               include_semantic: bool = False,
                               embed_udf=None,
-                              repair: bool = False,
-                              cache_messages: bool = True) -> DataFrame:
+                              repair: bool = False) -> DataFrame:
     """The reference's actual front door: Discord channel-export JSON
     -> flatten (S1/P1/P2) -> classify (C1) -> extract (E1-E8) -> Q&A
-    link (J1/J2) -> dedup + validate (A8/P7).  Same downstream DAG as
-    the pages path; only the source stage differs.
+    link (J1/J2) -> dedup + validate (A8/P7).  Same downstream DAG and
+    handoff as the pages path; only the source stage differs.
 
     `repair=True` routes through the malformed-export repair door
     (bare-string roles/mentions etc., preprocessor.py:54-65) — one
-    extra Python pass; leave off for well-formed exports.
-
-    The classified messages feed three branches (extract + both link
-    sides); without a cache each branch re-parses the export JSON and
-    re-runs the clean-text UDF (measured 3x the source stage at 50k
-    messages).  `cache_messages` persists the stage once per
-    invocation; the previous invocation's cache is unpersisted on the
-    next call (same at-most-one-entry pattern as the comparison
-    query's base cache), so nothing accumulates.  Callers staging to
-    parquet between pipeline phases should pass False and use
-    build_triples(stage_dir=...) semantics instead."""
+    extra Python pass; leave off for well-formed exports."""
     from ..operators.classify import with_type
     from ..sources.discord_export import (
         export_to_messages, read_discord_export,
@@ -120,14 +125,5 @@ def build_triples_from_export(spark: SparkSession, path: str,
     reader = (read_discord_export_repaired if repair
               else read_discord_export)
     messages = with_type(export_to_messages(reader(spark, path)))
-    if cache_messages:
-        while _EXPORT_MSG_CACHE:
-            try:  # prior entry may belong to a stopped SparkSession
-                _EXPORT_MSG_CACHE.pop().unpersist()
-            except Exception:
-                pass
-        messages = messages.persist()
-        _EXPORT_MSG_CACHE.append(messages)
-    extracted = extract_triples(messages)
-    links = link_qa(messages, include_semantic, embed_udf)
-    return aggregate_triples(extracted, links)
+    return triples_from_messages(hand_off(messages), include_semantic,
+                                 embed_udf)

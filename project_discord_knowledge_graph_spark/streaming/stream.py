@@ -29,6 +29,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.classify import with_type
+from ..plans.pipeline import (
+    build_triples, classify_pages, hand_off, release_handoff,
+    triples_from_messages,
+)
 from ..sources.pages import pages_to_messages
 from ..sources.synth import PAGES_SCHEMA
 
@@ -44,8 +48,8 @@ def stream_pages(spark: SparkSession, path: str,
 
 def streaming_triples(pages_stream: DataFrame, out_path: str,
                       checkpoint: str, available_now: bool = True):
-    """pages stream -> triples table, exactly-once per micro-batch."""
-    from ..plans.pipeline import build_triples
+    """pages stream -> triples table, exactly-once per micro-batch.
+    Each batch's messages handoff is released right after its write."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -55,6 +59,7 @@ def streaming_triples(pages_stream: DataFrame, out_path: str,
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("overwrite").partitionBy("batch_id")
          .parquet(out_path))
+        release_handoff(spark)
 
     writer = (pages_stream.writeStream
               .foreachBatch(process)
@@ -86,7 +91,8 @@ def streaming_export_triples(messages_stream: DataFrame, out_path: str,
                              cross_batch_dedup: bool = False):
     """Flattened export-message stream -> triples, exactly-once per
     micro-batch (classify + extract + link + dedup inside
-    foreachBatch, same as the pages path).
+    foreachBatch, same composition and handoff as the pages path; the
+    handoff is released right after the batch's write).
 
     Dedup scope contract:
 
@@ -120,10 +126,7 @@ def streaming_export_triples(messages_stream: DataFrame, out_path: str,
       pruning) or streaming_extraction_dedup's bounded state when
       duplicate lag is bounded.
     """
-    from ..operators.classify import with_type
-    from ..operators.dedup import aggregate_triples, dedup_key
-    from ..operators.extract import extract_triples
-    from ..operators.link import link_qa
+    from ..operators.dedup import dedup_key
 
     def _sink_files(spark: SparkSession) -> int:
         """Committed data files in the sink, via the Hadoop FS API —
@@ -145,29 +148,27 @@ def streaming_export_triples(messages_stream: DataFrame, out_path: str,
         spark = batch_df.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode",
                        "dynamic")
-        msgs = with_type(batch_df)
-        triples = aggregate_triples(extract_triples(msgs), link_qa(msgs))
-        if not cross_batch_dedup:
-            (triples.withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite").partitionBy("batch_id")
-             .parquet(out_path))
-            return
-        key = dedup_key(F.col("subject"), F.col("predicate"),
-                        F.col("object"))
-        triples = triples.withColumn("_key", key)
-        if _sink_files(spark) > 0:
-            sink = spark.read.parquet(out_path)
-            if "_key" not in sink.columns:
-                raise ValueError(
-                    f"cross-batch dedup sink {out_path!r} exists but "
-                    "has no _key column — it was written by a "
-                    "different mode (per-batch dedup?); refusing to "
-                    "append silently-undeduped batches")
-            triples = triples.join(sink.select("_key").distinct(),
-                                   "_key", "left_anti")
+        triples = triples_from_messages(hand_off(with_type(batch_df)))
+        mode = "overwrite"
+        if cross_batch_dedup:
+            mode = "append"
+            key = dedup_key(F.col("subject"), F.col("predicate"),
+                            F.col("object"))
+            triples = triples.withColumn("_key", key)
+            if _sink_files(spark) > 0:
+                sink = spark.read.parquet(out_path)
+                if "_key" not in sink.columns:
+                    raise ValueError(
+                        f"cross-batch dedup sink {out_path!r} exists "
+                        "but has no _key column — it was written by a "
+                        "different mode (per-batch dedup?); refusing "
+                        "to append silently-undeduped batches")
+                triples = triples.join(sink.select("_key").distinct(),
+                                       "_key", "left_anti")
         (triples.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").partitionBy("batch_id")
+         .write.mode(mode).partitionBy("batch_id")
          .parquet(out_path))
+        release_handoff(spark)
 
     writer = (messages_stream.writeStream
               .foreachBatch(process)
@@ -226,7 +227,6 @@ def streaming_extraction_dedup(messages_stream: DataFrame,
     Output rows keep an `event_ts` column (the parsed message
     timestamp; NULL on the quarantined branch).
     """
-    from ..operators.classify import with_type
     from ..operators.dedup import dedup_key
     from ..operators.extract import extract_triples
 
@@ -253,8 +253,7 @@ def hourly_type_counts(pages_stream: DataFrame,
                        watermark: str = "2 hours") -> DataFrame:
     """W4 hour buckets as a streaming windowed aggregate: counts of
     classified message types per tumbling hour of warc_ts."""
-    msgs = with_type(pages_to_messages(pages_stream))
-    return (msgs
+    return (classify_pages(pages_stream)
             .withWatermark("warc_ts", watermark)
             .groupBy(F.window("warc_ts", "1 hour").alias("hour"), "type")
             .agg(F.count("*").alias("n"))

@@ -65,25 +65,19 @@ def main() -> None:
     from project_discord_knowledge_graph_spark.session import get_spark
     spark = get_spark("kg-pipeline", master=args.master)
 
-    if args.warc_dir:
+    if args.warc_dir or args.export_json:
         from project_discord_knowledge_graph_spark.plans.pipeline import (
-            build_triples,
+            build_triples, build_triples_from_export, release_handoff,
         )
         from project_discord_knowledge_graph_spark.sources.warc import (
             read_warc,
         )
-        triples = build_triples(read_warc(spark, args.warc_dir))
+        triples = (build_triples(read_warc(spark, args.warc_dir))
+                   if args.warc_dir else
+                   build_triples_from_export(spark, args.export_json,
+                                             repair=args.repair))
         triples.write.mode("overwrite").parquet(f"{args.out}/triples")
-        print(json.dumps({
-            "triples_out":
-                spark.read.parquet(f"{args.out}/triples").count()}))
-    elif args.export_json:
-        from project_discord_knowledge_graph_spark.plans.pipeline import (
-            build_triples_from_export,
-        )
-        triples = build_triples_from_export(spark, args.export_json,
-                                            repair=args.repair)
-        triples.write.mode("overwrite").parquet(f"{args.out}/triples")
+        release_handoff(spark)
         print(json.dumps({
             "triples_out":
                 spark.read.parquet(f"{args.out}/triples").count()}))

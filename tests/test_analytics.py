@@ -56,9 +56,10 @@ def test_run_stage_metrics(spark, tmp_path):
 
 
 def test_pystrip_btrim_equivalent(spark):
-    """operators.dedup.pystrip (btrim over Java-\\s's char set) must
-    equal the regex ^\\s+|\\s+$ strip on every boundary combination of
-    the six \\s chars, plus non-ASCII whitespace it must NOT strip."""
+    """operators.dedup.pystrip (btrim over config.PY_WHITESPACE) must
+    equal Python's str.strip() — the reference's strip — on every
+    boundary combination of the six ASCII \\s chars, and strip the
+    non-ASCII whitespace str.strip() strips too (NBSP, em space)."""
     import itertools
 
     from pyspark.sql import functions as F
@@ -67,11 +68,10 @@ def test_pystrip_btrim_equivalent(spark):
     cases = ["".join(p) + "mid dle" + "".join(q)
              for p in itertools.product(ws, repeat=2)
              for q in itertools.product(ws, repeat=2)]
-    cases += ["", " ", " pad ", " x "]
+    cases += ["", " ", "\xa0pad\xa0", "\u2003x\u2003"]
     df = spark.createDataFrame([(c,) for c in cases], ["s"])
     from project_discord_knowledge_graph_spark.operators.dedup import pystrip
-    bad = df.select(
-        F.regexp_replace("s", r"^\s+|\s+$", "").alias("a"),
-        pystrip(F.col("s")).alias("b"),
-    ).where(F.col("a") != F.col("b")).count()
-    assert bad == 0
+    bad = [(r.s, r.b) for r in df.select(
+        "s", pystrip(F.col("s")).alias("b")).collect()
+        if r.b != r.s.strip()]
+    assert bad == []

@@ -298,3 +298,30 @@ def test_banded_lsh_recall_and_bucket_cap(spark):
     assert stats["n_dropped_buckets"] > 0
     assert stats["max_bucket"] > 50
     mentions.unpersist()
+
+
+def test_banded_minhash_pairs_repeatable(spark):
+    """Min-hash j hashes every element with the literal '<seed>:<j>',
+    so two builds over one input in one session give the same pairs.
+    (A salt bound to F.transform's index variable instead hashed that
+    variable's fresh name, which changes from build to build.)"""
+    from project_discord_knowledge_graph_spark.operators.lsh import (
+        banded_minhash_pairs,
+    )
+    # sliding windows of 10 tokens: neighbours at distance d have
+    # Jaccard (10-d)/(10+d), so pair membership depends on the hashes
+    sets = spark.range(300).select(
+        F.col("id"),
+        F.array(*[(F.col("id") + k).cast("string") for k in range(10)])
+         .alias("toks")).persist()
+    first = banded_minhash_pairs(sets, "id", "toks")
+    again = banded_minhash_pairs(sets, "id", "toks")
+    a = {(r.id_a, r.id_b) for r in first.collect()}
+    assert a and a == {(r.id_a, r.id_b) for r in again.collect()}
+    spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
+    try:
+        plan = first._jdf.queryExecution().analyzed().toString()
+    finally:
+        spark.conf.unset("spark.sql.debug.maxToStringFields")
+    assert "42:0," in plan and "42:59," in plan and "Column<" not in plan
+    sets.unpersist()

@@ -205,3 +205,53 @@ def test_extraction_parity_on_fuzz(spark, fuzz_df):
         for k in set(got) ^ set(want) | {
             k for k in set(got) & set(want) if got[k] != want[k]}
     }
+
+
+def test_strip_parity_on_all_whitespace(spark):
+    """A8/P7 strip semantics over every character Python's str.strip()
+    removes: aggregate_triples (dedup key, field strip, min object
+    length) vs the port's dedup_and_validate, and the oracle SQL's
+    strip (DuckDB) vs str.strip()."""
+    import duckdb
+
+    from project_discord_knowledge_graph_spark.config import PY_WHITESPACE
+    from project_discord_knowledge_graph_spark.entry_queries import (
+        _strip_sql,
+    )
+    from project_discord_knowledge_graph_spark.operators.dedup import (
+        aggregate_triples,
+    )
+
+    assert PY_WHITESPACE == "".join(
+        c for c in map(chr, range(0x110000)) if c.isspace())
+    rng = random.Random(29)
+
+    def pad():
+        return "".join(rng.choice(PY_WHITESPACE)
+                       for _ in range(rng.randrange(1, 3)))
+
+    triples = []
+    for ch in PY_WHITESPACE:
+        for subj, obj in ((f"{ch}alice", f"btc{pad()}"),   # dup of next
+                          ("alice", "btc"),
+                          (f"{pad()}bob{ch}", f"{ch}eth{ch}"),
+                          ("carol", f"{ch}x{pad()}"),       # too short
+                          ("dave", ch * 3),                 # blank
+                          (f"e{ch}ve", f"s{ch}ol")):        # inner kept
+            triples.append(dict(
+                subject=subj, predicate="mentions", object=obj,
+                message_id=f"m{len(triples):05d}", segment_id="seg",
+                timestamp="2024-01-01T00:00:00+00:00", confidence=0.6))
+    want = {(t["message_id"], t["subject"], t["predicate"], t["object"])
+            for t in ref.dedup_and_validate(triples)}
+    df = spark.createDataFrame(triples).withColumn(
+        "stage_priority", F.lit(0))
+    got = {(r.message_id, r.subject, r.predicate, r.object)
+           for r in aggregate_triples(df).collect()}
+    assert got == want, sorted(got ^ want)[:10]
+
+    con = duckdb.connect()
+    for t in triples:
+        s = t["subject"] + "|" + t["object"]
+        assert con.execute(f"SELECT {_strip_sql('?')}",
+                           [s]).fetchone()[0] == s.strip(), repr(s)
